@@ -1,7 +1,7 @@
 from sparkdedup.operators.bands import explode_bands
 from sparkdedup.operators.pairs import candidate_pairs
 from sparkdedup.operators.verify import verify_pairs, jaccard_expr
-from sparkdedup.operators.connected_components import connected_components, dense_relabel
+from sparkdedup.operators.connected_components import connected_components
 from sparkdedup.operators.certainty import with_certainty
 
 __all__ = [
@@ -10,6 +10,5 @@ __all__ = [
     "verify_pairs",
     "jaccard_expr",
     "connected_components",
-    "dense_relabel",
     "with_certainty",
 ]

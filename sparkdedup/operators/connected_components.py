@@ -1,23 +1,20 @@
-"""Connected components via alternating large-star / small-star rounds
-(Kiveris et al., "Connected Components in MapReduce and Beyond", 2014 —
-public algorithm), replacing the reference's in-core union-find
-(union_find.py:3-23; SURVEY.md §2.8 C1).
+"""Connected components, replacing the reference's in-core union-find
+(union_find.py:3-23; SURVEY.md §2.8 C1), on one of two routes chosen by
+the measured edge count (``SMALL_GRAPH_MAX_EDGES``):
 
-Each round is two shuffles (groupBy min + join); convergence in
-O(log n) rounds.  Per-round materialization has two modes (VERDICT r03
-item 4):
-
-  * default: ``localCheckpoint`` — the right local-mode call (cuts the
-    iterative plan so it doesn't snowball, SURVEY.md §4 iterative row),
-    but its blocks are NON-REPLICATED executor memory: on a real cluster,
-    losing an executor mid-loop loses blocks and kills the job;
-  * with a ``ckpt`` (CheckpointManager with a root): every round is a
-    DURABLE checkpoint table (``cc_round_NNN``) — executor loss recomputes
-    the round from the previous round's table, and a killed/crashed JOB
-    resumes by replaying committed round tables (cheap reads, no
-    recompute) up to the first uncommitted round.  This closes the
-    north-rule "any stage can resume" story for the one stage that was
-    memory-only.
+  * below the gate, in both modes, ONE single-task numpy kernel
+    (``_single_task_components``).  With a ``ckpt`` (CheckpointManager
+    with a root) its output is one durable checkpoint stage,
+    ``{prefix}_components``: the resume unit of a seconds-long kernel is
+    the stage, so a killed job reloads it instead of recomputing;
+  * above the gate, alternating large-star / small-star rounds (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", 2014 —
+    public algorithm): two shuffles per round, O(log n) rounds.  Each
+    round is a ``localCheckpoint`` (cuts the iterative plan; its blocks
+    are NON-REPLICATED executor memory) or, with a ``ckpt``, a DURABLE
+    table ``{prefix}_round_NNN``: executor loss recomputes one round, and
+    a killed job resumes by reloading the committed rounds up to the
+    first uncommitted one.
 
 Output labels each node with its component's MINIMUM doc_id — which is
 exactly the canonical form needed to reproduce the reference's dense
@@ -36,17 +33,15 @@ from pyspark.sql import functions as F
 
 MAX_ROUNDS = 50
 
-# Small-graph fast path (round 6): below this many distinct edges the
-# whole loop is replaced by ONE single-task numpy kernel (see
-# _single_task_components).  The loop's per-round cost at small edge
-# counts is almost pure scheduling — each round is a localCheckpoint job
-# plus a fingerprint job over a handful of near-empty shuffles (measured
+# Small-graph gate: below this many edges, memory and durable mode alike
+# run ONE single-task numpy kernel (_single_task_components) instead of
+# the star loop, whose per-round cost at small edge counts is almost pure
+# scheduling — a localCheckpoint job (or a durable table write and
+# read-back) plus a fingerprint job over near-empty shuffles (measured
 # 4.5-6.8 s for 3 rounds over 142k edges at sf1.0, vs ~0.5 s for the
 # kernel).  10M edges keeps the task's working set ~100s of MB and its
 # wall in single-digit seconds; above it, the O(log n) loop is the only
-# shape that scales.  Memory-only mode: durable (checkpointed) runs keep
-# the round-table loop, whose per-round tables ARE the resumability
-# contract.
+# shape that scales.
 SMALL_GRAPH_MAX_EDGES = 10_000_000
 
 
@@ -160,10 +155,10 @@ def connected_components(
     component min; component-min nodes themselves are NOT included (they
     have no outgoing star edge).
 
-    ckpt: optional CheckpointManager — when it has a root, each round
-    materializes as the durable table ``{stage_prefix}_round_NNN`` instead
-    of a localCheckpoint, making the loop resumable and executor-loss-safe
-    (see module docstring)."""
+    ckpt: optional CheckpointManager — when it has a root, the kernel's
+    output is the durable stage ``{stage_prefix}_components`` and each loop
+    round the durable table ``{stage_prefix}_round_NNN`` instead of a
+    localCheckpoint, making both routes resumable (see module docstring)."""
     import copy
 
     from sparkdedup.sessionutil import private_session, rebind
@@ -191,7 +186,7 @@ def connected_components(
     loop_spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     edges = rebind(edges, loop_spark)
     if durable:
-        # the clone's ckpt reads/writes round tables on the loop session,
+        # the clone's ckpt reads/writes stage tables on the loop session,
         # keeping every round's plan under the loop conf
         ckpt = copy.copy(ckpt)
         ckpt.spark = loop_spark
@@ -203,23 +198,33 @@ def connected_components(
             return ckpt.stage(name, build)
         return build().localCheckpoint(eager=True)
 
-    e = _cut(
-        lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
-        f"{stage_prefix}_round_000",
-    )
+    def _round_000() -> DataFrame:
+        return _cut(
+            lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
+            f"{stage_prefix}_round_000",
+        )
+
+    use_kernel = small_graph_max_edges is not None
+    # durable mode gates on the raw edge count (an upper bound on the
+    # distinct count) and hands the kernel the raw edges, which it
+    # deduplicates itself: no round_000 table below the gate
+    e = edges if durable and use_kernel else _round_000()
     prev = _fingerprint(e)
-    if (
-        not durable
-        and small_graph_max_edges is not None
-        and prev[0] <= small_graph_max_edges
-    ):
-        # small graph, memory mode: one single-task kernel instead of
-        # O(log n) near-empty-shuffle rounds (see SMALL_GRAPH_MAX_EDGES)
-        star = _single_task_components(e)
+    if use_kernel and prev[0] <= small_graph_max_edges:
+        # small graph: one single-task kernel instead of O(log n) rounds
+        # (see SMALL_GRAPH_MAX_EDGES); durable mode commits it as one stage
+        star = (
+            ckpt.stage(f"{stage_prefix}_components", lambda: _single_task_components(e))
+            if durable
+            else _single_task_components(e)
+        )
         return rebind(
             star.select(F.col("src").alias("doc_id"), F.col("dst").alias("root")),
             spark,
         )
+    if durable and use_kernel:
+        e = _round_000()
+        prev = _fingerprint(e)
     # Size the loop's shuffles to the measured edge count: each round is a
     # fixed handful of small shuffles, and running them at the session's
     # full shuffle parallelism means near-empty reducers — pure scheduler
@@ -279,14 +284,5 @@ def assignments_from_components(
     dense_ids = roots.select(
         "root",
         (F.dense_rank().over(Window.orderBy("root")) - 1).alias("cluster_id"),
-    )
-    return labeled.join(dense_ids, "root").select("doc_id", "cluster_id")
-
-
-def dense_relabel(labeled: DataFrame) -> DataFrame:
-    """(doc_id, root) -> (doc_id, cluster_id) with reference-parity dense ids."""
-    roots = labeled.select("root").distinct()
-    dense_ids = roots.select(
-        "root", (F.dense_rank().over(Window.orderBy("root")) - 1).alias("cluster_id")
     )
     return labeled.join(dense_ids, "root").select("doc_id", "cluster_id")

@@ -69,6 +69,10 @@ def _broadcast_signatures(
     )
     order = np.argsort(ids)
     ids = np.ascontiguousarray(ids[order])
+    if (ids[1:] == ids[:-1]).any():
+        # searchsorted would pick one copy where the shuffle-hash join
+        # emits a row per copy: the strategies would silently differ
+        raise ValueError("verify: the signature table has duplicate doc_ids")
     # MinHash signature values are 32-bit (masked with 2^32-1 in
     # sparkdedup.minhash); storing the broadcast matrix as uint32 halves
     # both the per-worker footprint and the kernel's memory traffic, and
@@ -79,6 +83,16 @@ def _broadcast_signatures(
     if mat.size and 0 <= mat.min() and mat.max() <= 0xFFFFFFFF:
         mat = mat.astype(np.uint32)
     return signatures.sparkSession.sparkContext.broadcast((ids, mat))
+
+
+def _rows(ids: np.ndarray, keys: np.ndarray, what: str) -> np.ndarray:
+    """Row of each key in the sorted broadcast ids; ValueError if absent."""
+    rows = np.searchsorted(ids, keys)
+    if (rows == len(ids)).any() or not np.array_equal(ids[rows], keys):
+        raise ValueError(
+            f"verify: {what} references a doc_id absent from the signature table"
+        )
+    return rows
 
 
 def _verify_kernel(bc, threshold: float, num_perm: int):
@@ -95,13 +109,8 @@ def _verify_kernel(bc, threshold: float, num_perm: int):
         for b in batches:
             src = b.column("src").to_numpy()
             dst = b.column("dst").to_numpy()
-            si = np.searchsorted(ids, src)
-            di = np.searchsorted(ids, dst)
-            if not (np.array_equal(ids[si], src) and np.array_equal(ids[di], dst)):
-                raise ValueError(
-                    "verify: candidate pair references a doc_id absent from "
-                    "the signature table"
-                )
+            si = _rows(ids, src, "candidate pair")
+            di = _rows(ids, dst, "candidate pair")
             sim = (mat[si] == mat[di]).sum(axis=1) / denom
             keep = sim >= threshold
             yield pa.RecordBatch.from_arrays(
@@ -135,16 +144,11 @@ def _fused_kernel(bc, threshold: float, num_perm: int):
             cj = batch.column("cj").to_numpy()
             ms = batch.column("ms")
             offs = ms.offsets.to_numpy()
+            offs = offs - offs[0]  # flatten() starts at a slice's first member
             flat = ms.flatten()
             ds = np.asarray(flat.field("d"))
             cs = np.asarray(flat.field("c"))
-            rows = np.searchsorted(ids, ds)
-            if not np.array_equal(ids[rows], ds):
-                raise ValueError(
-                    "verify: band member references a doc_id absent from "
-                    "the signature table"
-                )
-            sig_rows = mat[rows]
+            sig_rows = mat[_rows(ids, ds, "band member")]
             out_lo, out_hi, out_sim = [], [], []
             for g in range(len(ci)):
                 lo_, hi_ = offs[g], offs[g + 1]

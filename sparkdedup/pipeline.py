@@ -187,19 +187,19 @@ class DedupPipeline:
         return "broadcast" if est <= c.verify_broadcast_max_bytes else "shuffle_hash"
 
     def cluster(self, docs_ids: DataFrame, edges: DataFrame) -> DataFrame:
-        # with a checkpoint dir, CC rounds materialize as durable tables
-        # (cc_round_NNN) instead of non-replicated localCheckpoint blocks:
-        # executor loss mid-loop recomputes one round, a killed job
-        # resumes from the committed rounds (VERDICT r03 item 4)
+        # with a checkpoint dir, CC output is durable: below the small-graph
+        # gate the numpy kernel commits one cc_components stage, above it
+        # each star-loop round is a cc_round_NNN table, so a killed job
+        # resumes from what was committed (VERDICT r03 item 4)
         prefix = "cc"
         if self.ckpt.root is not None and self.ckpt.manifest is None:
             # Direct cluster() call (outside run(), so no manifest is in
-            # play): round tables staged under a bare "cc" prefix would be
+            # play): CC tables staged under a bare "cc" prefix would be
             # trusted by a LATER direct call against the same dir even if
             # its edges differ — a silent wrong-components reload.  Fold
             # the edge set's identity (canonicalized-plan semantic hash,
             # which includes LocalRelation data) into the prefix: same
-            # edges resume their own rounds, different edges get disjoint
+            # edges resume their own tables, different edges get disjoint
             # tables.
             prefix = f"cc_{edges.semanticHash() & 0xFFFFFFFF:08x}"
         star = connected_components(edges, ckpt=self.ckpt, stage_prefix=prefix)

@@ -71,9 +71,11 @@ def test_star_and_clique(spark):
 
 
 def test_cc_durable_rounds_resume_after_kill(spark, tmp_path, monkeypatch):
-    """VERDICT r03 item 4: with a CheckpointManager, CC rounds are durable
-    tables — a job killed mid-loop resumes from the committed rounds
-    (reloaded, not recomputed) and produces identical labels."""
+    """VERDICT r03 item 4: with a CheckpointManager, star-loop rounds are
+    durable tables — a job killed mid-loop resumes from the committed
+    rounds (reloaded, not recomputed) and produces identical labels.  The
+    loop runs only above the small-graph gate, so the gate is switched
+    off here."""
     import importlib
 
     # the operators package re-exports the FUNCTION under the same name,
@@ -108,7 +110,7 @@ def test_cc_durable_rounds_resume_after_kill(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cc, "_small_star", crashing_small_star)
     ck1 = CheckpointManager(spark, root, manifest=manifest)
     with pytest.raises(RuntimeError, match="simulated"):
-        connected_components(edges, ckpt=ck1)
+        connected_components(edges, ckpt=ck1, small_graph_max_edges=None)
     monkeypatch.undo()
     committed = ck1.list_stages()
     assert "cc_round_000" in committed and "cc_round_002" in committed
@@ -122,7 +124,7 @@ def test_cc_durable_rounds_resume_after_kill(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(cc, "_small_star", counting_small_star)
     ck2 = CheckpointManager(spark, root, manifest=manifest)
-    star = connected_components(edges, ckpt=ck2)
+    star = connected_components(edges, ckpt=ck2, small_graph_max_edges=None)
     got = labels(star)
     assert got == want
     # rounds 1-2 came from tables; only the remaining rounds were built
@@ -133,12 +135,16 @@ def test_cc_durable_rounds_resume_after_kill(spark, tmp_path, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_small_graph_kernel_matches_star_loop(spark):
+def test_small_graph_kernel_matches_star_loop(spark, tmp_path):
     """Round-6 fast path: the single-task numpy kernel (default for small
-    memory-mode graphs) must produce the same star edges as the
-    large-star/small-star loop (forced via small_graph_max_edges=None) on
-    adversarial shapes — long chain (worst diameter), random graphs,
-    cliques, and the empty set."""
+    graphs, in memory and durable mode) must produce the same star edges
+    as the large-star/small-star loop (forced via
+    small_graph_max_edges=None) on adversarial shapes — long chain (worst
+    diameter), random graphs, cliques, duplicate edges, self-loops, and
+    the empty set.  The durable kernel reads the raw edges, so duplicates
+    and self-loops reach it undeduplicated."""
+    from sparkdedup.checkpoint import CheckpointManager
+
     random_graphs = []
     rng = random.Random(13)
     for _ in range(3):
@@ -149,19 +155,68 @@ def test_small_graph_kernel_matches_star_loop(spark):
         [(i, i + 1) for i in range(63)],                       # chain
         [(0, i) for i in range(1, 9)],                         # star
         [(a, b) for a in range(5) for b in range(a + 1, 5)],   # clique
+        [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (3, 4)],      # duplicates
+        [(5, 5), (1, 2), (2, 2), (7, 7)],                      # self-loops
+        [(6, 6)],                                              # only a self-loop
         [],                                                    # empty
         *random_graphs,
     ]
-    for edge_list in shapes:
+    for k, edge_list in enumerate(shapes):
         edges = spark.createDataFrame(
             [(a, b) for a, b in edge_list] or [(0, 0)], "src long, dst long"
         )
         if not edge_list:
             edges = edges.limit(0)
         fast = connected_components(edges)
+        ck = CheckpointManager(spark, str(tmp_path / f"shape_{k}"))
+        durable = connected_components(edges, ckpt=ck)
         loop = connected_components(edges, small_graph_max_edges=None)
         to_set = lambda df: {(r["doc_id"], r["root"]) for r in df.collect()}
-        assert to_set(fast) == to_set(loop), edge_list[:5]
+        want = to_set(loop)
+        assert to_set(fast) == want, edge_list[:5]
+        assert to_set(durable) == want, edge_list[:5]
+        assert ck.list_stages() == ["cc_components"], edge_list[:5]
+
+
+def test_cc_durable_kernel_resumes_from_components_stage(
+    spark, tmp_path, monkeypatch
+):
+    """Below the gate, durable CC commits the kernel's output as ONE
+    stage (cc_components, no round tables); a second run against the same
+    manifest reloads it without running the kernel, with identical
+    labels."""
+    import importlib
+
+    cc = importlib.import_module("sparkdedup.operators.connected_components")
+    from sparkdedup.checkpoint import CheckpointManager
+
+    n = 40
+    edge_list = [(i, i + 1) for i in range(0, n - 1, 2)] + [(3, 5), (5, 7)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+
+    def labels(star):
+        out = assignments_from_components(docs, star, dense=True)
+        return {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+
+    root = str(tmp_path / "cc_kernel")
+    manifest = {"test": "cc_kernel", "n": n}
+    ck1 = CheckpointManager(spark, root, manifest=manifest)
+    first = labels(connected_components(edges, ckpt=ck1))
+    assert first == _ref_cc(n, edge_list)
+    assert ck1.list_stages() == ["cc_components"]
+
+    kernel_runs = {"n": 0}
+    real_kernel = cc._single_task_components
+
+    def counting_kernel(e):
+        kernel_runs["n"] += 1
+        return real_kernel(e)
+
+    monkeypatch.setattr(cc, "_single_task_components", counting_kernel)
+    ck2 = CheckpointManager(spark, root, manifest=manifest)
+    assert labels(connected_components(edges, ckpt=ck2)) == first
+    assert kernel_runs["n"] == 0
 
 
 def test_cc_durable_labels_match_memory_mode(spark, tmp_path):

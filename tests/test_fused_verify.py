@@ -5,14 +5,23 @@ it exactly when the gate conditions hold."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
 from sparkdedup.operators.bands import explode_bands
 from sparkdedup.operators.pairs import candidate_pairs, salted_members
-from sparkdedup.operators.verify import verify_members, verify_pairs
+from sparkdedup.operators.verify import (
+    _fused_kernel,
+    _verify_kernel,
+    verify_members,
+    verify_pairs,
+)
 from sparkdedup.pipeline import DedupPipeline
 
 
@@ -103,3 +112,90 @@ def test_fused_gate_respects_pair_consumers(spark):
         pipe.run(docs)
         stages = pipe.ckpt.list_stages()
         assert "06_edges" in stages and "05_pairs" not in stages
+
+
+def _kernel_inputs():
+    """Broadcast value (sorted ids, signature matrix) for ids 10, 20, 30,
+    40: docs 10/20 share every position, 30 shares half with them, 40
+    shares nothing."""
+    ids = np.array([10, 20, 30, 40], dtype=np.int64)
+    mat = np.array(
+        [[1, 2, 3, 4], [1, 2, 3, 4], [1, 2, 9, 9], [5, 6, 7, 8]], dtype=np.uint32
+    )
+    return SimpleNamespace(value=(ids, mat))
+
+
+def _pair_batch(pairs):
+    src, dst = zip(*pairs)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(src, pa.int64()), pa.array(dst, pa.int64())], ["src", "dst"]
+    )
+
+
+def _bucket_batch(buckets):
+    """[(ci, cj, [(d, c), ...]), ...] -> a salted_members Arrow batch."""
+    ci, cj, ms = zip(*buckets)
+    member = pa.struct([("d", pa.int64()), ("c", pa.int32())])
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ci, pa.int32()),
+            pa.array(cj, pa.int32()),
+            pa.array(
+                [[{"d": d, "c": c} for d, c in m] for m in ms], pa.list_(member)
+            ),
+        ],
+        ["ci", "cj", "ms"],
+    )
+
+
+def _emitted(gen, batch):
+    return sorted(
+        (s, d, sim)
+        for out in gen(iter([batch]))
+        for s, d, sim in zip(*(out.column(i).to_pylist() for i in range(3)))
+    )
+
+
+def test_verify_kernels_reject_id_above_every_signature():
+    """An id greater than every broadcast id searches to len(ids): both
+    kernels must raise their ValueError, not an IndexError."""
+    bc = _kernel_inputs()
+    pair_gen = _verify_kernel(bc, 0.3, 4)
+    with pytest.raises(ValueError, match="absent from the signature table"):
+        _emitted(pair_gen, _pair_batch([(10, 20), (10, 99)]))
+    fused_gen = _fused_kernel(bc, 0.3, 4)
+    with pytest.raises(ValueError, match="absent from the signature table"):
+        _emitted(fused_gen, _bucket_batch([(0, 0, [(10, 0), (99, 0)])]))
+
+
+def test_verify_kernels_read_sliced_batches():
+    """A batch whose list column starts at a non-zero offset (a slice)
+    must verify exactly the members it holds."""
+    bc = _kernel_inputs()
+    pairs = [(10, 40), (10, 20), (20, 30), (30, 40)]
+    pair_gen = _verify_kernel(bc, 0.3, 4)
+    assert _emitted(pair_gen, _pair_batch(pairs).slice(1, 2)) == _emitted(
+        pair_gen, _pair_batch(pairs[1:3])
+    )
+    buckets = [
+        (0, 0, [(30, 0), (40, 0)]),
+        (0, 0, [(10, 0), (20, 0), (30, 0)]),
+        (0, 1, [(10, 0), (20, 1), (40, 1)]),
+    ]
+    fused_gen = _fused_kernel(bc, 0.3, 4)
+    got = _emitted(fused_gen, _bucket_batch(buckets).slice(1, 2))
+    assert got == _emitted(fused_gen, _bucket_batch(buckets[1:]))
+    assert got == [(10, 20, 1.0), (10, 20, 1.0), (10, 30, 0.5), (20, 30, 0.5)]
+
+
+def test_broadcast_verify_rejects_duplicate_doc_ids(spark):
+    """A signature table with a repeated doc_id would make the broadcast
+    lookup keep one copy where the shuffle-hash join keeps every copy;
+    the broadcast strategy must refuse it."""
+    sigs = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 4]), (2, [1, 2, 9, 9])],
+        "doc_id long, sig array<long>",
+    )
+    pairs = spark.createDataFrame([(1, 2)], "src long, dst long")
+    with pytest.raises(ValueError, match="duplicate doc_ids"):
+        verify_pairs(pairs, sigs, 0.3, 4, strategy="broadcast")
