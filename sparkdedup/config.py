@@ -99,10 +99,11 @@ class DedupConfig:
     # Hot-band defense: bands whose bucket exceeds this many docs are
     # salted into sub-buckets for the pair join (pairs across salt cells
     # still generated) — purely a shuffle-shape change, not a semantics
-    # change.  None disables salting.  512 also bounds the cold path's
-    # per-band pair-explode array at C(512,2) ≈ 131k entries (~2 MB
-    # transient per band group).
-    band_salt_threshold: int | None = 512
+    # change.  A positive int; a threshold above every band size means one
+    # cell per band.  512 also bounds the cold path's per-band
+    # pair-explode array at C(512,2) ≈ 131k entries (~2 MB transient per
+    # band group).
+    band_salt_threshold: int = 512
     # Optional recall-losing cap: drop bands larger than this outright and
     # log them (analogue of the reference's candidate caps, cluster_in_mem
     # .py:165 — OFF by default because it loses recall; see SURVEY §2.7 T7).

@@ -84,6 +84,9 @@ class IncrementalDedup:
     at-least-once delivery from the stream becomes exactly-once state."""
 
     _TABLES = ("signatures", "bands", "edges")
+    # DedupConfig fields of stages only DedupPipeline runs
+    _BATCH_ONLY = ("simhash_hamming_max", "max_candidates",
+                   "substring_min_span", "exact_dedup_prepass")
 
     def __init__(
         self,
@@ -99,6 +102,13 @@ class IncrementalDedup:
         batch — disable only when batches are disjoint by construction."""
         self.spark = spark
         self.config = config or DedupConfig()
+        bad = [f"{f}={getattr(self.config, f)!r}" for f in self._BATCH_ONLY
+               if getattr(self.config, f) != getattr(DedupConfig, f)]
+        if bad:
+            # ignoring them would make the edges silently differ from a batch run's
+            raise ValueError(
+                f"IncrementalDedup does not run {', '.join(bad)}; use DedupPipeline"
+            )
         self.pipe = DedupPipeline(spark, self.config)
         self.state_dir = state_dir
         self.dedupe_ids = dedupe_ids
@@ -324,6 +334,8 @@ class IncrementalDedup:
         m_dst = prior.select(
             F.col("doc_id").alias("dst"), F.col("cluster_id").alias("_dst_c")
         )
+        # cut once: the joins read every prior assignment, and CC reads its
+        # input twice (fingerprint, then the kernel's one coalesced task)
         contracted = (
             new_edges.select("src", "dst")
             .join(m_src, "src", "left")
@@ -333,6 +345,7 @@ class IncrementalDedup:
                 F.coalesce("_dst_c", "dst").alias("dst"),
             )
             .where(F.col("src") != F.col("dst"))
+            .localCheckpoint(eager=True)
         )
         star = connected_components(contracted)  # (doc_id=label|new_doc, root)
         # old labels can only collide with prior cluster_ids (doc ids are

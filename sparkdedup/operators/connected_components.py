@@ -1,15 +1,17 @@
 """Connected components, replacing the reference's in-core union-find
-(union_find.py:3-23; SURVEY.md §2.8 C1), on one of two routes chosen by
-the measured edge count (``SMALL_GRAPH_MAX_EDGES``):
+(union_find.py:3-23; SURVEY.md §2.8 C1), on one of two routes chosen,
+in both modes, by the RAW input edge count (``SMALL_GRAPH_MAX_EDGES``):
 
-  * below the gate, in both modes, ONE single-task numpy kernel
-    (``_single_task_components``).  With a ``ckpt`` (CheckpointManager
-    with a root) its output is one durable checkpoint stage,
-    ``{prefix}_components``: the resume unit of a seconds-long kernel is
-    the stage, so a killed job reloads it instead of recomputing;
+  * at or below the gate, ONE single-task numpy kernel
+    (``_single_task_components``) on the caller's session.  With a ``ckpt``
+    (CheckpointManager with a root) its output is one durable checkpoint
+    stage, ``{prefix}_components``: the resume unit of a seconds-long
+    kernel is the stage, so a killed job reloads it instead of
+    recomputing;
   * above the gate, alternating large-star / small-star rounds (Kiveris
     et al., "Connected Components in MapReduce and Beyond", 2014 —
-    public algorithm): two shuffles per round, O(log n) rounds.  Each
+    public algorithm): two shuffles per round, O(log n) rounds, on a
+    private session with its own shuffle sizing and AQE off.  Each
     round is a ``localCheckpoint`` (cuts the iterative plan; its blocks
     are NON-REPLICATED executor memory) or, with a ``ckpt``, a DURABLE
     table ``{prefix}_round_NNN``: executor loss recomputes one round, and
@@ -26,22 +28,26 @@ bit-for-bit; SURVEY.md §2.8 C2).
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkdedup.sessionutil import private_session, rebind
+
 MAX_ROUNDS = 50
 
-# Small-graph gate: below this many edges, memory and durable mode alike
-# run ONE single-task numpy kernel (_single_task_components) instead of
-# the star loop, whose per-round cost at small edge counts is almost pure
-# scheduling — a localCheckpoint job (or a durable table write and
-# read-back) plus a fingerprint job over near-empty shuffles (measured
-# 4.5-6.8 s for 3 rounds over 142k edges at sf1.0, vs ~0.5 s for the
-# kernel).  10M edges keeps the task's working set ~100s of MB and its
-# wall in single-digit seconds; above it, the O(log n) loop is the only
-# shape that scales.
+# Small-graph gate on the RAW input edge count: at or below it, memory and
+# durable mode alike run ONE single-task numpy kernel, with no private
+# session, instead of the star loop, whose per-round cost at small edge
+# counts is almost pure scheduling — a localCheckpoint job (or a durable
+# table write and read-back) plus a fingerprint job over near-empty
+# shuffles (measured 4.5-6.8 s for 3 rounds over 142k edges at sf1.0, vs
+# ~0.5 s for the kernel).  10M edges keeps the task's working set ~100s of
+# MB and its wall in single-digit seconds; above it, the O(log n) loop is
+# the only shape that scales.
 SMALL_GRAPH_MAX_EDGES = 10_000_000
 
 
@@ -87,7 +93,9 @@ def _single_task_components(edges: DataFrame) -> DataFrame:
 
     This is an executor task, not a driver collect: the gated edge list
     is coalesced into one partition and the kernel runs where the data
-    is.  Deterministic for retries (pure function of the edge set)."""
+    is: coalesce(1) does not shuffle, so callers hand it a cut or scanned
+    table (an uncut join would run in the one task).  Deterministic for
+    retries (pure function of the edge set)."""
 
     def gen(batches):
         srcs, dsts = [], []
@@ -129,7 +137,7 @@ def _single_task_components(edges: DataFrame) -> DataFrame:
 
 def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     # bit_xor: order-insensitive, overflow-free (ANSI-safe) set fingerprint;
-    # edges are distinct so xor cancellation of duplicates cannot occur.
+    # copies of a repeated raw edge cancel in the xor but add to the count.
     # Convergence-by-fingerprint is probabilistic: a (count, xor-of-xxhash64)
     # collision between two successive DIFFERENT edge sets would terminate a
     # round early and silently emit a coarser clustering.  With a 64-bit
@@ -159,12 +167,23 @@ def connected_components(
     output is the durable stage ``{stage_prefix}_components`` and each loop
     round the durable table ``{stage_prefix}_round_NNN`` instead of a
     localCheckpoint, making both routes resumable (see module docstring)."""
-    import copy
-
-    from sparkdedup.sessionutil import private_session, rebind
-
     durable = ckpt is not None and getattr(ckpt, "root", None) is not None
-
+    # ONE fingerprint of the RAW edges gates both modes: its count bounds
+    # the distinct count, and the kernel drops duplicates and self-loops
+    prev = _fingerprint(edges)
+    if small_graph_max_edges is not None and prev[0] <= small_graph_max_edges:
+        star = (
+            ckpt.stage(f"{stage_prefix}_components", lambda: _single_task_components(edges))
+            if durable
+            else _single_task_components(edges)
+        )
+        return star.select(F.col("src").alias("doc_id"), F.col("dst").alias("root"))
+    # Star loop, seeded with the raw fingerprint: round 1 matching it
+    # means raw == round_000 == round_001, a fixed point (up to the 2^-64
+    # bound; a duplicate or self-loop in raw would make them differ).
+    # Round edges point large -> small and pipeline pairs are src < dst, so
+    # on those the seed saves a fingerprint job and never costs a round.
+    #
     # Conf isolation (VERDICT r04 item 4): the loop needs its own shuffle
     # sizing and AQE off, so it runs on a PRIVATE session clone — a
     # concurrent query on the caller's session mid-loop sees the caller's
@@ -198,33 +217,6 @@ def connected_components(
             return ckpt.stage(name, build)
         return build().localCheckpoint(eager=True)
 
-    def _round_000() -> DataFrame:
-        return _cut(
-            lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
-            f"{stage_prefix}_round_000",
-        )
-
-    use_kernel = small_graph_max_edges is not None
-    # durable mode gates on the raw edge count (an upper bound on the
-    # distinct count) and hands the kernel the raw edges, which it
-    # deduplicates itself: no round_000 table below the gate
-    e = edges if durable and use_kernel else _round_000()
-    prev = _fingerprint(e)
-    if use_kernel and prev[0] <= small_graph_max_edges:
-        # small graph: one single-task kernel instead of O(log n) rounds
-        # (see SMALL_GRAPH_MAX_EDGES); durable mode commits it as one stage
-        star = (
-            ckpt.stage(f"{stage_prefix}_components", lambda: _single_task_components(e))
-            if durable
-            else _single_task_components(e)
-        )
-        return rebind(
-            star.select(F.col("src").alias("doc_id"), F.col("dst").alias("root")),
-            spark,
-        )
-    if durable and use_kernel:
-        e = _round_000()
-        prev = _fingerprint(e)
     # Size the loop's shuffles to the measured edge count: each round is a
     # fixed handful of small shuffles, and running them at the session's
     # full shuffle parallelism means near-empty reducers — pure scheduler
@@ -244,6 +236,10 @@ def connected_components(
     # a driver replan between each — measured ~58 extra jobs / ~15 s
     # of pure scheduling churn per flagship run at test scale.
     loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
+    e = _cut(
+        lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
+        f"{stage_prefix}_round_000",
+    )
     for rnd in range(1, max_rounds + 1):
         prev_e = e
         e = _cut(

@@ -23,6 +23,8 @@ handles both regimes via triangle salting with a size-adaptive cell count:
     zero replication — identical cost to a plain per-band group-explode.
     Hot bands pay an S-fold replication of their own rows only, and every
     bucket holds <= ~2*salt_threshold members regardless of band size.
+    salt_threshold must be a positive int; one above every band size
+    means one cell per band.
   * optional drop_threshold: bands larger still are dropped outright and
     counted (the only recall-losing knob; OFF by default).
 
@@ -37,17 +39,10 @@ workaround conf is needed (regression: tests/test_vanilla_session.py).
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _pairs_from_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    l = left.select(*on, F.col("doc_id").alias("src"))
-    r = right.select(*on, F.col("doc_id").alias("dst"))
-    # shuffle-hash beats sort-merge here: band rows are narrow (two longs),
-    # group sizes are bounded (hot bands were split off), and the output
-    # explodes quadratically per group so the sort would dominate
-    return l.join(r.hint("shuffle_hash"), on).where(F.col("src") < F.col("dst"))
 
 
 def dropped_band_stats(bands: DataFrame, drop_threshold: int) -> dict:
@@ -131,6 +126,14 @@ def salted_members(
     singletons).  The groupBy reuses the window's hash partitioning
     (band_key is a prefix of the group keys) — no extra exchange; bucket
     arrays are bounded by ~2*salt_threshold members."""
+    if isinstance(salt_threshold, bool) or not (
+        isinstance(salt_threshold, numbers.Integral) and salt_threshold >= 1
+    ):
+        # None or 0 would reach ceil(size / salt_threshold) as a null cell
+        # count, an empty cell sequence and silently zero pairs
+        raise ValueError(
+            f"salt_threshold must be a positive int, got {salt_threshold!r}"
+        )
     if drop_threshold is not None and drop_threshold < salt_threshold:
         raise ValueError(
             f"drop_threshold ({drop_threshold}) must be >= salt_threshold "
@@ -168,10 +171,14 @@ def salted_members(
 
 def candidate_pairs(
     bands: DataFrame,
-    salt_threshold: int | None = 2000,
+    salt_threshold: int,
     drop_threshold: int | None = None,
 ) -> DataFrame:
     """(band_key, doc_id) -> distinct (src long, dst long), src < dst.
+
+    salt_threshold: positive int, the band size above which a band is
+    split into salt cells (module docstring; the pipeline passes
+    ``DedupConfig.band_salt_threshold``); ValueError otherwise.
 
     drop_threshold: buckets larger than this are removed entirely.  At
     r=3, a bucket of thousands of docs is driven by globally-common
@@ -181,26 +188,6 @@ def candidate_pairs(
     loss is negligible while the pair volume drops by orders of magnitude.
     (The reference's max_candidates=500/150 caps are its blunter version
     of the same defense — cluster_in_mem.py:165.)"""
-    if (
-        salt_threshold is not None
-        and drop_threshold is not None
-        and drop_threshold < salt_threshold
-    ):
-        # bands in (drop, salt] would be classified cold-and-kept while the
-        # drop audit logs them as dropped — the lineage would lie
-        raise ValueError(
-            f"drop_threshold ({drop_threshold}) must be >= salt_threshold "
-            f"({salt_threshold}): bands sized in between would be kept but "
-            "logged as dropped"
-        )
-    if salt_threshold is None:
-        w = Window.partitionBy("band_key")
-        sized = bands.withColumn("band_size", F.count(F.lit(1)).over(w))
-        sized = sized.where(F.col("band_size") >= 2)
-        if drop_threshold is not None:
-            sized = sized.where(F.col("band_size") <= F.lit(drop_threshold))
-        return _pairs_from_join(sized, sized, ["band_key"]).select("src", "dst").distinct()
-
     # Unified salted group-explode — no join, no Union (see module doc).
     # n_cells = 1 for cold bands, so the dominant path is a zero-replication
     # single-bucket group-explode; hot bands fan out into bounded cell-pair

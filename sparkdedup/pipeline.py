@@ -30,7 +30,11 @@ from sparkdedup.operators.connected_components import (
     assignments_from_components,
     connected_components,
 )
-from sparkdedup.operators.pairs import candidate_pairs
+from sparkdedup.operators.pairs import (
+    candidate_pairs,
+    dropped_band_stats,
+    salted_members,
+)
 from sparkdedup.operators.verify import verify_pairs
 
 
@@ -109,6 +113,16 @@ class DedupPipeline:
             with_simhash=c.simhash_hamming_max is not None,
         )
 
+    def _bands(self, sigs: DataFrame) -> DataFrame:
+        """LSH band rows (band_key, doc_id) for both pair routes; with the
+        drop knob set, records what it removes (no silent caps)."""
+        c = self.config
+        bands = explode_bands(sigs, *c.bands_rows())
+        if c.band_drop_threshold is not None:
+            self.last_drop_stats = dropped_band_stats(bands, c.band_drop_threshold)
+            self.ckpt.log_event({"event": "dropped_bands", **self.last_drop_stats})
+        return bands
+
     def pairs(self, sigs: DataFrame) -> DataFrame:
         """LSH candidate pairs (src, dst), optionally pre-filtered by the
         complementary SimHash pass (north_star): Hamming distance over the
@@ -116,16 +130,8 @@ class DedupPipeline:
         num_perm*8-byte signature) so the expensive full-signature verify
         join only sees pairs that survive the cheap bit filter."""
         c = self.config
-        b, r = c.bands_rows()
-        bands = explode_bands(sigs, b, r)
-        if c.band_drop_threshold is not None:
-            # no silent caps: record what the drop knob removed
-            from sparkdedup.operators.pairs import dropped_band_stats
-
-            self.last_drop_stats = dropped_band_stats(bands, c.band_drop_threshold)
-            self.ckpt.log_event({"event": "dropped_bands", **self.last_drop_stats})
         pairs = candidate_pairs(
-            bands,
+            self._bands(sigs),
             salt_threshold=c.band_salt_threshold,
             drop_threshold=c.band_drop_threshold,
         )
@@ -159,20 +165,12 @@ class DedupPipeline:
         pair-expansion + Jaccard verify (operators.verify.verify_members),
         skipping the materialized candidate-pair stage.  Bit-identical to
         the staged path; see _run for the gate."""
-        from sparkdedup.operators.pairs import salted_members
         from sparkdedup.operators.verify import verify_members
 
         c = self.config
-        b, r = c.bands_rows()
-        bands = explode_bands(sigs, b, r)
-        if c.band_drop_threshold is not None:
-            # no silent caps: record what the drop knob removed (same
-            # audit row the staged path logs)
-            from sparkdedup.operators.pairs import dropped_band_stats
-
-            self.last_drop_stats = dropped_band_stats(bands, c.band_drop_threshold)
-            self.ckpt.log_event({"event": "dropped_bands", **self.last_drop_stats})
-        members = salted_members(bands, c.band_salt_threshold, c.band_drop_threshold)
+        members = salted_members(
+            self._bands(sigs), c.band_salt_threshold, c.band_drop_threshold
+        )
         return verify_members(members, sigs, c.threshold, c.num_perm)
 
     def verify_strategy(self, sigs: DataFrame) -> str:
@@ -187,9 +185,10 @@ class DedupPipeline:
         return "broadcast" if est <= c.verify_broadcast_max_bytes else "shuffle_hash"
 
     def cluster(self, docs_ids: DataFrame, edges: DataFrame) -> DataFrame:
-        # with a checkpoint dir, CC output is durable: below the small-graph
-        # gate the numpy kernel commits one cc_components stage, above it
-        # each star-loop round is a cc_round_NNN table, so a killed job
+        # CC gates on the raw edge count in both modes; with a checkpoint
+        # dir its output is durable: at or below the gate the numpy kernel
+        # commits one cc_components stage, above it each star-loop round
+        # (on a private session) is a cc_round_NNN table, so a killed job
         # resumes from what was committed (VERDICT r03 item 4)
         prefix = "cc"
         if self.ckpt.root is not None and self.ckpt.manifest is None:
@@ -314,14 +313,13 @@ class DedupPipeline:
         # and only threshold survivors reach a shuffle (measured 28-60 s ->
         # ~9 s at sf1.0 for the two stages).  The staged path remains for
         # every config that CONSUMES the pair table (substring stage,
-        # candidate caps, simhash pre-filter), for the no-salting join
-        # formulation, and for the above-broadcast-cap scale regime.
+        # candidate caps, simhash pre-filter) and for the above-broadcast-cap
+        # scale regime.
         fused = (
             strategy == "broadcast"
             and c.substring_min_span is None
             and c.max_candidates is None
             and c.simhash_hamming_max is None
-            and c.band_salt_threshold is not None
         )
         if fused:
             pairs = None

@@ -135,15 +135,27 @@ def test_cc_durable_rounds_resume_after_kill(spark, tmp_path, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_small_graph_kernel_matches_star_loop(spark, tmp_path):
+def test_small_graph_kernel_matches_star_loop(spark, tmp_path, monkeypatch):
     """Round-6 fast path: the single-task numpy kernel (default for small
     graphs, in memory and durable mode) must produce the same star edges
     as the large-star/small-star loop (forced via
     small_graph_max_edges=None) on adversarial shapes — long chain (worst
     diameter), random graphs, cliques, duplicate edges, self-loops, and
-    the empty set.  The durable kernel reads the raw edges, so duplicates
-    and self-loops reach it undeduplicated."""
+    the empty set.  Both modes feed the kernel the raw edges, so
+    duplicates and self-loops reach it undeduplicated."""
+    import importlib
+
+    cc = importlib.import_module("sparkdedup.operators.connected_components")
     from sparkdedup.checkpoint import CheckpointManager
+
+    kernel_inputs = []
+    real_kernel = cc._single_task_components
+
+    def recording_kernel(e):
+        kernel_inputs.append(e.count())
+        return real_kernel(e)
+
+    monkeypatch.setattr(cc, "_single_task_components", recording_kernel)
 
     random_graphs = []
     rng = random.Random(13)
@@ -167,10 +179,12 @@ def test_small_graph_kernel_matches_star_loop(spark, tmp_path):
         )
         if not edge_list:
             edges = edges.limit(0)
+        kernel_inputs.clear()
         fast = connected_components(edges)
         ck = CheckpointManager(spark, str(tmp_path / f"shape_{k}"))
         durable = connected_components(edges, ckpt=ck)
         loop = connected_components(edges, small_graph_max_edges=None)
+        assert kernel_inputs == [len(edge_list)] * 2, edge_list[:5]
         to_set = lambda df: {(r["doc_id"], r["root"]) for r in df.collect()}
         want = to_set(loop)
         assert to_set(fast) == want, edge_list[:5]
@@ -236,3 +250,77 @@ def test_cc_durable_labels_match_memory_mode(spark, tmp_path):
     assert labels(connected_components(edges, ckpt=ck)) == labels(
         connected_components(edges)
     )
+
+
+def _counted_cc(monkeypatch, spark, tmp_path, durable, **kwargs):
+    """Run connected_components on a chain with one duplicate edge and one
+    self-loop, counting _fingerprint, _small_star (one call per loop
+    round), private_session and rebind calls."""
+    import importlib
+
+    cc = importlib.import_module("sparkdedup.operators.connected_components")
+    from sparkdedup.checkpoint import CheckpointManager
+
+    calls = {"_fingerprint": 0, "_small_star": 0, "private_session": 0, "rebind": 0}
+
+    def counting(name):
+        real = getattr(cc, name)
+
+        def wrapper(*a, **kw):
+            calls[name] += 1
+            return real(*a, **kw)
+
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(cc, name, counting(name))
+    edge_list = [(i, i + 1) for i in range(9)] + [(1, 2), (5, 5)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    ck = CheckpointManager(spark, str(tmp_path / "ck")) if durable else None
+    star = connected_components(edges, ckpt=ck, **kwargs)
+    assert {(r["doc_id"], r["root"]) for r in star.collect()} == {
+        (i, 0) for i in range(1, 10)
+    }
+    monkeypatch.undo()
+    return calls, edge_list, ck
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+def test_cc_fingerprints_raw_input_once_plus_once_per_round(
+    spark, tmp_path, monkeypatch, durable
+):
+    """Both modes fingerprint the RAW input once and gate on its count
+    (duplicates and self-loops included); the loop adds one fingerprint
+    per round and nothing else."""
+    n_raw = 11  # 9 chain edges + a duplicate + a self-loop
+    calls, edge_list, ck = _counted_cc(
+        monkeypatch, spark, tmp_path, durable, small_graph_max_edges=n_raw
+    )
+    assert len(edge_list) == n_raw
+    assert calls["_fingerprint"] == 1 and calls["_small_star"] == 0
+    if durable:
+        assert ck.list_stages() == ["cc_components"]
+
+    # one raw edge over the gate: the loop, though only 9 edges are distinct
+    calls, _, ck = _counted_cc(
+        monkeypatch, spark, tmp_path / "loop", durable, small_graph_max_edges=n_raw - 1
+    )
+    rounds = calls["_small_star"]
+    assert rounds > 0
+    assert calls["_fingerprint"] == 1 + rounds
+    if durable:
+        assert ck.list_stages() == [f"cc_round_{r:03d}" for r in range(rounds + 1)]
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+def test_cc_kernel_route_makes_no_private_session(
+    spark, tmp_path, monkeypatch, durable
+):
+    """The private session, its rebinds and the ckpt clone belong to the
+    star loop alone: the kernel route runs on the caller's session."""
+    calls, _, _ = _counted_cc(monkeypatch, spark, tmp_path, durable)
+    assert calls["private_session"] == 0 and calls["rebind"] == 0
+    calls, _, _ = _counted_cc(
+        monkeypatch, spark, tmp_path / "loop", durable, small_graph_max_edges=None
+    )
+    assert calls["private_session"] == 1 and calls["rebind"] == 2

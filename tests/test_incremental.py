@@ -2,16 +2,26 @@
 multi-batch mode produces the same clusters as single-batch given the
 same uncapped edge set — SURVEY.md §2.4 L3 note)."""
 
+import pytest
+
 from sparkdedup.config import DedupConfig
 from sparkdedup.incremental import IncrementalDedup
 from sparkdedup.io.webtext import webtext_spark_df
 from sparkdedup.pipeline import DedupPipeline
 
 
-def test_incremental_matches_global(spark):
+@pytest.mark.parametrize(
+    "broadcast_max", [DedupConfig.verify_broadcast_max_bytes, None],
+    ids=["broadcast", "shuffle_hash"],
+)
+def test_incremental_matches_global(spark, broadcast_max):
+    """Both verify strategies of the incremental route (broadcast under
+    the default cap, shuffle-hash with None) equal the global run."""
     n = 240
     sdf = webtext_spark_df(spark, n, seed=42).localCheckpoint(eager=True)
-    cfg = DedupConfig(threshold=0.3, shingle_size=6)
+    cfg = DedupConfig(
+        threshold=0.3, shingle_size=6, verify_broadcast_max_bytes=broadcast_max
+    )
 
     full = DedupPipeline(spark, cfg).run(sdf)
     want = {r["doc_id"]: r["cluster_id"] for r in full["assignments"].collect()}
@@ -133,3 +143,52 @@ def test_overlapping_batches_first_write_wins(spark):
         .collect()
     }
     assert {r["doc_id"]: r["cluster_id"] for r in rows} == want
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("simhash_hamming_max", 64),
+        ("max_candidates", 3),
+        ("substring_min_span", 8),
+        ("exact_dedup_prepass", True),
+    ],
+)
+def test_incremental_rejects_batch_only_config(spark, field, value):
+    """Incremental ingest does not run these stages; accepting the field
+    would silently give different edges from a batch run."""
+    cfg = DedupConfig(threshold=0.3, shingle_size=4, **{field: value})
+    with pytest.raises(ValueError, match=field):
+        IncrementalDedup(spark, cfg)
+
+
+def test_cc_kernel_never_runs_an_uncut_join(spark, tmp_path, monkeypatch):
+    """The small-graph kernel coalesces its input into one task without a
+    shuffle, so any join left in that input would run in the one task:
+    for the contracted graph that is a join over EVERY prior assignment.
+    First batch, incremental batch and a fresh instance's rebuild must all
+    hand the kernel an edge table with no join in its plan."""
+    import importlib
+
+    # the package re-exports the function under the module's name
+    cc_mod = importlib.import_module("sparkdedup.operators.connected_components")
+    plans = []
+    kernel = cc_mod._single_task_components
+
+    def recording(edges):
+        plans.append(edges._jdf.queryExecution().executedPlan().toString())
+        return kernel(edges)
+
+    monkeypatch.setattr(cc_mod, "_single_task_components", recording)
+    sdf = webtext_spark_df(spark, 120, seed=42).localCheckpoint(eager=True)
+    cfg = DedupConfig(threshold=0.3, shingle_size=6)
+    sd = str(tmp_path / "state")
+    inc = IncrementalDedup(spark, cfg, state_dir=sd)
+    inc.ingest_batch(sdf.where("doc_id < 40"))  # first batch: CC of new_edges
+    inc.ingest_batch(sdf.where("doc_id >= 40 and doc_id < 80"))  # contracted
+    IncrementalDedup(spark, cfg, state_dir=sd).ingest_batch(
+        sdf.where("doc_id >= 80")
+    )  # fresh instance: one rebuild over the stored edges, this batch's too
+    assert len(plans) == 3
+    for plan in plans:
+        assert "Join" not in plan, plan

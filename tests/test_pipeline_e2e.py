@@ -4,6 +4,7 @@ parity, certainty parity, dup-pair recall >= 0.99)."""
 
 import itertools
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -103,15 +104,49 @@ def test_exact_dedup_prepass_same_clusters(spark, corpus):
 
 def test_salting_equivalence(spark, corpus):
     """Hot-band triangle salting is a shuffle-shape change only: forcing a
-    tiny salt threshold must not change the edge set."""
+    tiny salt threshold must not change the edge set against a threshold
+    above every band size (one cell per band)."""
     pdf, sdf = corpus
-    cfg_plain = DedupConfig(threshold=0.3, shingle_size=6, band_salt_threshold=None)
+    cfg_plain = DedupConfig(
+        threshold=0.3, shingle_size=6, band_salt_threshold=len(pdf) + 1
+    )
     cfg_salt = DedupConfig(threshold=0.3, shingle_size=6, band_salt_threshold=5)
     e1 = DedupPipeline(spark, cfg_plain).run(sdf)["edges"]
     e2 = DedupPipeline(spark, cfg_salt).run(sdf)["edges"]
     s1 = {(r["src"], r["dst"], round(r["sim"], 9)) for r in e1.collect()}
     s2 = {(r["src"], r["dst"], round(r["sim"], 9)) for r in e2.collect()}
     assert s1 == s2
+
+
+@pytest.mark.parametrize("salt", [None, 0, True])
+def test_salt_threshold_must_be_positive_int(spark, salt):
+    """A salt threshold of None or 0 would give a null cell count and
+    silently zero pairs, and a bool is not a band size; the staged
+    (candidate_pairs) and fused (run) routes both reject them before any
+    pair job."""
+    from sparkdedup.operators.pairs import candidate_pairs
+
+    sdf = spark.createDataFrame(
+        [(0, "a near duplicate text"), (1, "a near duplicate text")],
+        "doc_id long, text string",
+    )
+    bands = spark.createDataFrame([(7, 0), (7, 1)], "band_key long, doc_id long")
+    with pytest.raises(ValueError, match="positive int"):
+        candidate_pairs(bands, salt_threshold=salt)
+    cfg = DedupConfig(threshold=0.3, shingle_size=4, band_salt_threshold=salt)
+    with pytest.raises(ValueError, match="positive int"):
+        DedupPipeline(spark, cfg).run(sdf)
+
+
+def test_salt_threshold_accepts_numpy_int(spark):
+    """A threshold computed from data (a numpy integer) is a valid int."""
+    from sparkdedup.operators.pairs import candidate_pairs
+
+    bands = spark.createDataFrame(
+        [(7, 0), (7, 1), (7, 2)], "band_key long, doc_id long"
+    )
+    got = {(r["src"], r["dst"]) for r in candidate_pairs(bands, np.int64(2)).collect()}
+    assert got == {(0, 1), (0, 2), (1, 2)}
 
 
 def test_property_planted_dups_cocluster(spark, corpus):

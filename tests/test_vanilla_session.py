@@ -104,20 +104,29 @@ def test_stage_composition_with_constraint_propagation_on(vanilla):
 
 
 def test_salted_pairs_match_unsalted_on_vanilla_session(vanilla):
-    """The unified salted group-explode must emit exactly the join-based
-    pair set, on a vanilla session, with hot buckets forced."""
+    """The unified salted group-explode must emit exactly the unsalted
+    oracle's pair set (every pair sharing a band), on a vanilla session,
+    with hot buckets forced."""
+    import numpy as np
+
     from sparkdedup.functions.signatures import attach_signatures
     from sparkdedup.operators.bands import explode_bands
     from sparkdedup.operators.pairs import candidate_pairs
 
+    from .oracle import candidate_pairs_ref
+
     docs = make_corpus(vanilla)
     clean = docs.select("doc_id", F.col("text").alias("clean"))
-    sigs = attach_signatures(clean, 4, 16, 42)
-    bands = explode_bands(sigs, *DedupConfig(threshold=0.3, num_perm=16).bands_rows())
+    sigs = attach_signatures(clean, 4, 16, 42).localCheckpoint(eager=True)
+    b, r = DedupConfig(threshold=0.3, num_perm=16).bands_rows()
+    bands = explode_bands(sigs, b, r)
+    rows = sorted((row["doc_id"], row["sig"]) for row in sigs.collect())
+    ids = [doc_id for doc_id, _ in rows]
     ref = {
-        (r["src"], r["dst"])
-        for r in candidate_pairs(bands, salt_threshold=None).collect()
+        (ids[i], ids[j])
+        for i, j in candidate_pairs_ref([np.array(sig) for _, sig in rows], b, r)
     }
+    assert ref  # the corpus plants near-duplicates
     # salt=1 is the extreme: every member its own cell, all pairs cross-
     # bucket — maximal replication must still be exact
     for salt in (1, 2, 3, 1000):
