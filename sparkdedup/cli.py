@@ -74,7 +74,7 @@ def parse_args(argv=None) -> argparse.Namespace:
                         "requires --state-dir, reuses --checkpoint for the stream's "
                         "exactly-once progress log")
     p.add_argument("--state-dir", default=None,
-                   help="incremental state tables dir (signatures/bands/edges), "
+                   help="incremental state tables dir (signatures/edges), "
                         "persisted across runs; required with --stream")
     p.add_argument("--max-files-per-trigger", type=int, default=None,
                    help="bound micro-batch size in --stream mode (files per trigger)")

@@ -4,19 +4,21 @@ clustered corpus — the capability the reference's multi-batch /
 for Spark's execution model.
 
 The reference keeps a growing in-memory LSH index and queries it per new
-doc.  Here the persisted state IS three append-only tables:
+doc.  Here the persisted state is the two append-only tables that cannot
+be recomputed:
 
-    signatures(doc_id, sig)     bands(band_key, doc_id)     edges(src, dst, sim)
+    signatures(doc_id, sig)     edges(src, dst, sim)
 
-A new batch is signed, banded, joined against new+old bands (the old side
-is touched ONLY on the new batch's band keys — a semi-join-pruned read,
-the shuffle analogue of "query the index"), verified, and APPENDED:
+A new batch is signed, banded, joined against new+old bands (the old
+bands are exploded from the stored signatures and touched ONLY on the new
+batch's band keys — a semi-join-pruned read, the shuffle analogue of
+"query the index"), verified, and APPENDED:
 
   * Per batch only the DELTA is materialized (localCheckpoint of the new
-    signatures/bands/edges); prior deltas stay materialized from their own
-    batch.  Batch k costs O(delta_k + touched-bands), not O(total) — the
-    round-1 design re-unioned and re-checkpointed the FULL state every
-    batch, a quadratic rewrite over a run (VERDICT r01 "what's wrong" 6).
+    signatures/edges); prior deltas stay materialized from their own
+    batch.  Batch k writes O(delta_k), not O(total) — the round-1 design
+    re-unioned and re-checkpointed the FULL state every batch, a
+    quadratic rewrite over a run (VERDICT r01 "what's wrong" 6).
   * Clustering is ALSO O(delta): new edges are contracted onto the prior
     cluster labels (min-doc-id labels are stable under merges), connected
     components runs over that contracted delta graph only, and the
@@ -24,9 +26,8 @@ the shuffle analogue of "query the index"), verified, and APPENDED:
     broadcast-joined back onto the prior assignments.  The only O(total)
     work per batch is emitting the full updated assignment view itself
     (which is the return value); no CC iteration ever touches old edges
-    again.  A FRESH instance resuming from ``state_dir`` rebuilds its
-    assignment state with one global CC on its first ingest, then
-    increments.
+    again.  An instance's first ingest builds its assignment state with
+    one global CC over the committed state, this batch included.
   * Candidate pairs are pruned to those touching >= 1 NEW doc: an old-old
     pair inside a touched band shared that band when both docs were
     ingested, so it was emitted by an earlier batch — appending only
@@ -34,7 +35,8 @@ the shuffle analogue of "query the index"), verified, and APPENDED:
     global dropDuplicates pass.
   * With ``state_dir`` set, deltas append to parquet tables and survive
     the session (wrap ``ingest_batch`` in ``foreachBatch`` of a
-    Structured Streaming reader for continuous ingest).
+    Structured Streaming reader for continuous ingest).  Commit markers
+    record the result-affecting config; reopening under another raises.
 
 Caveat: ``band_drop_threshold`` is evaluated against the *touched* band
 sizes per batch, so a band that grows past the cap mid-run starts being
@@ -48,6 +50,7 @@ them) — verified in tests/test_incremental.py.
 
 from __future__ import annotations
 
+import json
 import os
 from functools import reduce
 
@@ -73,33 +76,30 @@ class IncrementalDedup:
     or parquet delta directories under ``state_dir`` governed by a
     COMMIT LOG (``state_dir/_commits/<token>.json``).
 
-    Exactly-once fold protocol (state_dir mode): each batch's three
+    Exactly-once fold protocol (state_dir mode): each batch's two
     deltas are written to ``<table>/delta=<token>/`` (mode=overwrite, so
     a replay of a torn write is idempotent), and the commit marker is
-    written ONLY after all three deltas are durable.  Readers union ONLY
+    written ONLY after both deltas are durable.  Readers union ONLY
     committed delta dirs, so a crash mid-batch leaves invisible orphans,
     never torn state.  When the caller supplies a stable ``batch_id``
     (e.g. Structured Streaming's foreachBatch id), a replayed
     already-committed batch is recognized by its marker and skipped —
     at-least-once delivery from the stream becomes exactly-once state."""
 
-    _TABLES = ("signatures", "bands", "edges")
     # DedupConfig fields of stages only DedupPipeline runs
     _BATCH_ONLY = ("simhash_hamming_max", "max_candidates",
                    "substring_min_span", "exact_dedup_prepass")
+    # DedupConfig fields that decide the stored signatures and edges (the
+    # salt and broadcast caps only shape the plan)
+    _STATE_FIELDS = ("threshold", "shingle_size", "num_perm", "seed",
+                     "preprocess", "band_drop_threshold")
 
     def __init__(
         self,
         spark: SparkSession,
         config: DedupConfig | None = None,
         state_dir: str | None = None,
-        dedupe_ids: bool = True,
     ):
-        """dedupe_ids: drop incoming docs whose doc_id is already in the
-        state (first-write-wins) via an anti-join against the signature
-        table's doc_id column.  Protects against overlapping input
-        batches; costs one column-pruned scan of the signature state per
-        batch — disable only when batches are disjoint by construction."""
         self.spark = spark
         self.config = config or DedupConfig()
         bad = [f"{f}={getattr(self.config, f)!r}" for f in self._BATCH_ONLY
@@ -111,14 +111,15 @@ class IncrementalDedup:
             )
         self.pipe = DedupPipeline(spark, self.config)
         self.state_dir = state_dir
-        self.dedupe_ids = dedupe_ids
-        self._deltas: dict[str, list[DataFrame]] = {t: [] for t in self._TABLES}
+        self._deltas: dict[str, list[DataFrame]] = {"signatures": [], "edges": []}
         self._seen_tokens: set[str] = set()  # in-memory mode replay guard
         # materialized (doc_id, cluster_id) from the previous ingest; None
-        # until the first ingest (or on a fresh instance resuming from
-        # state_dir — rebuilt by one global CC on its first batch)
+        # until this instance's first ingest rebuilds it by one global CC
         self._assignments: DataFrame | None = None
+        self._state_config = {f: getattr(self.config, f) for f in self._STATE_FIELDS}
+        self._state_config["preprocess"] = self.config.preprocess_options()
         self.n_batches = len(self._committed_tokens())
+        self._check_state_config()
 
     # --- commit log ---
 
@@ -138,13 +139,27 @@ class IncrementalDedup:
             return token in self._seen_tokens
         return os.path.exists(os.path.join(self._commits_dir(), f"{token}.json"))
 
+    def _check_state_config(self) -> None:
+        """Raise unless every committed batch of ``state_dir`` was written
+        under this config's ``_STATE_FIELDS`` (no-op in memory mode, which
+        has no commits at construction)."""
+        for token in self._committed_tokens():
+            with open(os.path.join(self._commits_dir(), f"{token}.json")) as f:
+                # markers written before configs were recorded carry none
+                stored = json.load(f).get("config", self._state_config)
+            diff = [f"{k}={stored.get(k)!r} (config has {v!r})"
+                    for k, v in self._state_config.items() if stored.get(k) != v]
+            if diff:
+                raise ValueError(
+                    f"state_dir {self.state_dir} was written with "
+                    f"{', '.join(diff)}; its signatures and edges cannot be mixed"
+                )
+
     def _commit(self, token: str, meta: dict) -> None:
         if self.state_dir is None:
             self._seen_tokens.add(token)
             return
         os.makedirs(self._commits_dir(), exist_ok=True)
-        import json
-
         tmp = os.path.join(self._commits_dir(), f".{token}.tmp")
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -176,10 +191,6 @@ class IncrementalDedup:
         return self._table("signatures")
 
     @property
-    def bands(self) -> DataFrame | None:
-        return self._table("bands")
-
-    @property
     def edges(self) -> DataFrame | None:
         return self._table("edges")
 
@@ -190,20 +201,13 @@ class IncrementalDedup:
         return self._assignments
 
     def _rebuild_assignments(self) -> DataFrame:
-        """Global CC over the committed state — the one-time cost of a
-        fresh instance resuming mid-run (steady-state batches cluster
-        incrementally)."""
-        from pyspark.sql import functions as F
-
-        sigs = self.signatures
-        edges = self.edges
-        if sigs is None:
-            raise ValueError("no committed state to rebuild assignments from")
-        ids = sigs.select("doc_id")
-        if edges is None:
-            return ids.select("doc_id", F.col("doc_id").alias("cluster_id"))
-        star = connected_components(edges)
-        return assignments_from_components(ids, star, dense=False)
+        """Global CC over the committed state (at least one batch) — the
+        one-time cost of an instance's first ingest (steady-state batches
+        cluster incrementally)."""
+        star = connected_components(self.edges)
+        return assignments_from_components(
+            self.signatures.select("doc_id"), star, dense=False
+        )
 
     # --- ingest ---
 
@@ -235,22 +239,21 @@ class IncrementalDedup:
         b, r = c.bands_rows()
 
         old_sigs = self.signatures  # committed state only
-        old_bands = self.bands
         clean = self.pipe.normalize(docs, text_col, id_col)
-        if self.dedupe_ids and old_sigs is not None:
+        if old_sigs is not None:
             # first-write-wins on re-delivered doc_ids: without this, a
             # duplicate doc contracts onto its own prior label and the
             # incremental relabel would emit conflicting rows for it
             clean = clean.join(old_sigs.select("doc_id"), "doc_id", "left_anti")
         new_sigs = self.pipe.signatures(clean).localCheckpoint(eager=True)
-        new_bands = explode_bands(new_sigs, b, r).localCheckpoint(eager=True)
+        new_bands = explode_bands(new_sigs, b, r)
 
-        if old_bands is None:
+        if old_sigs is None:
             touched_bands = new_bands
         else:
             # the "index query": only old band rows sharing a new band key
             # participate — semi-join prune instead of a full re-shuffle
-            old_hits = old_bands.join(
+            old_hits = explode_bands(old_sigs, b, r).join(
                 new_bands.select("band_key").distinct(), "band_key", "leftsemi"
             )
             touched_bands = old_hits.unionByName(new_bands)
@@ -260,7 +263,7 @@ class IncrementalDedup:
             salt_threshold=c.band_salt_threshold,
             drop_threshold=c.band_drop_threshold,
         )
-        if old_bands is not None:
+        if old_sigs is not None:
             # keep only pairs with a NEW endpoint (old-old pairs inside
             # touched bands were emitted when their docs were ingested)
             new_ids = new_sigs.select("doc_id")
@@ -275,7 +278,6 @@ class IncrementalDedup:
         all_sigs = (
             new_sigs if old_sigs is None else old_sigs.unionByName(new_sigs)
         )
-        had_prior_edges = self._table("edges") is not None
         # size-adaptive verify strategy (guide §3.1), same gate as the
         # batch pipeline: all_sigs is materialized state (delta parquet +
         # the batch localCheckpoint), so the sizing count is cheap
@@ -287,27 +289,24 @@ class IncrementalDedup:
             strategy=self.pipe.verify_strategy(all_sigs),
         ).localCheckpoint(eager=True)
 
-        # durable exactly-once commit: three idempotent delta writes, then
+        # durable exactly-once commit: two idempotent delta writes, then
         # the marker — a crash anywhere before the marker leaves the state
         # exactly as before this batch
         self._write_delta("signatures", new_sigs, token)
-        self._write_delta("bands", new_bands, token)
         self._write_delta("edges", new_edges, token)
-        self._commit(token, {"batch_id": batch_id, "token": token})
+        self._commit(
+            token, {"batch_id": batch_id, "token": token, "config": self._state_config}
+        )
         self.n_batches += 1
 
         prior = self._assignments
-        if prior is None and had_prior_edges:
-            # fresh instance resuming from persisted state: rebuild the
-            # assignment state once with a global CC, then increment
-            assign = self._rebuild_assignments()
-        elif prior is None:
-            star = connected_components(new_edges)
-            assign = assignments_from_components(
-                all_sigs.select("doc_id"), star, dense=False
-            )
-        else:
-            assign = self._incremental_assignments(prior, new_edges, new_sigs)
+        # the committed state already holds this batch, so the rebuild
+        # also covers an instance's first batch
+        assign = (
+            self._rebuild_assignments()
+            if prior is None
+            else self._incremental_assignments(prior, new_edges, new_sigs)
+        )
         self._assignments = assign.localCheckpoint(eager=True)
         return self._assignments
 

@@ -154,7 +154,6 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
 
 def connected_components(
     edges: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
     ckpt=None,
     stage_prefix: str = "cc",
     small_graph_max_edges: int | None = SMALL_GRAPH_MAX_EDGES,
@@ -240,7 +239,7 @@ def connected_components(
         lambda: edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
         f"{stage_prefix}_round_000",
     )
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(1, MAX_ROUNDS + 1):
         prev_e = e
         e = _cut(
             lambda: _small_star(_large_star(prev_e)),
@@ -252,7 +251,7 @@ def connected_components(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected components did not converge in {max_rounds} rounds"
+            f"connected components did not converge in {MAX_ROUNDS} rounds"
         )
     # fixed point of small-star is a star graph: src -> component min;
     # hand the result back to the caller's session

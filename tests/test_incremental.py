@@ -2,9 +2,12 @@
 multi-batch mode produces the same clusters as single-batch given the
 same uncapped edge set — SURVEY.md §2.4 L3 note)."""
 
+import json
+import os
+
 import pytest
 
-from sparkdedup.config import DedupConfig
+from sparkdedup.config import PREPROCESS_FULL, DedupConfig
 from sparkdedup.incremental import IncrementalDedup
 from sparkdedup.io.webtext import webtext_spark_df
 from sparkdedup.pipeline import DedupPipeline
@@ -61,6 +64,9 @@ def test_incremental_state_dir_survives_instances(spark, tmp_path):
     inc1 = IncrementalDedup(spark, cfg, state_dir=sd)
     inc1.ingest_batch(sdf.where("doc_id < 60"))
     inc1.ingest_batch(sdf.where("doc_id >= 60 and doc_id < 120"))
+    # only the state that cannot be recomputed (band rows derive from
+    # the signatures) is stored
+    assert sorted(os.listdir(sd)) == ["_commits", "edges", "signatures"]
 
     inc2 = IncrementalDedup(spark, cfg, state_dir=sd)  # fresh instance
     assign = inc2.ingest_batch(sdf.where("doc_id >= 120"))
@@ -80,8 +86,6 @@ def test_exactly_once_commit_log(spark, tmp_path):
     """Replay protection + torn-write invisibility: a re-delivered batch
     (same batch_id) must not change the committed state, and delta dirs
     without a commit marker (a crash before commit) are never read."""
-    import os
-
     docs = webtext_spark_df(spark, 120, seed=3).select("doc_id", "text")
     cfg = DedupConfig(threshold=0.3, shingle_size=4)
     sd = str(tmp_path / "state")
@@ -124,7 +128,7 @@ def test_exactly_once_commit_log(spark, tmp_path):
 def test_overlapping_batches_first_write_wins(spark):
     """A doc_id delivered in two different batches must appear exactly
     once in state and exactly once in the returned assignments (the
-    dedupe_ids anti-join guard)."""
+    first-write-wins anti-join on the stored doc_ids)."""
     docs = webtext_spark_df(spark, 120, seed=3).select("doc_id", "text")
     cfg = DedupConfig(threshold=0.3, shingle_size=4)
     inc = IncrementalDedup(spark, cfg)
@@ -192,3 +196,88 @@ def test_cc_kernel_never_runs_an_uncut_join(spark, tmp_path, monkeypatch):
     assert len(plans) == 3
     for plan in plans:
         assert "Join" not in plan, plan
+
+
+def _global_labels(spark, sdf, cfg) -> dict:
+    out = DedupPipeline(spark, cfg).run(sdf)["assignments"]
+    return {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+
+
+def test_legacy_bands_layout_resumes(spark, tmp_path):
+    """A state_dir in the older three-table layout (a bands/delta=<token>
+    table per batch, commit markers without a config) resumes on a fresh
+    instance to the global run's assignments, and its bands/ table gains
+    no delta."""
+    from sparkdedup.operators.bands import explode_bands
+
+    sdf = webtext_spark_df(spark, 180, seed=42).localCheckpoint(eager=True)
+    cfg = DedupConfig(threshold=0.3, shingle_size=6)
+    sd = str(tmp_path / "state")
+    inc1 = IncrementalDedup(spark, cfg, state_dir=sd)
+    inc1.ingest_batch(sdf.where("doc_id < 60"), batch_id=0)
+    inc1.ingest_batch(sdf.where("doc_id >= 60 and doc_id < 120"), batch_id=1)
+
+    # rewrite the state into the older layout
+    b, r = cfg.bands_rows()
+    commits = os.path.join(sd, "_commits")
+    for token in ("b0", "b1"):
+        sigs = spark.read.parquet(os.path.join(sd, "signatures", f"delta={token}"))
+        explode_bands(sigs, b, r).write.parquet(
+            os.path.join(sd, "bands", f"delta={token}")
+        )
+        with open(os.path.join(commits, f"{token}.json"), "w") as f:
+            json.dump({"batch_id": int(token[1:]), "token": token}, f)
+
+    inc2 = IncrementalDedup(spark, cfg, state_dir=sd)
+    assign = inc2.ingest_batch(sdf.where("doc_id >= 120"), batch_id=2)
+    got = {r["doc_id"]: r["cluster_id"] for r in assign.collect()}
+    assert got == _global_labels(spark, sdf, cfg)
+    assert sorted(os.listdir(os.path.join(sd, "bands"))) == ["delta=b0", "delta=b1"]
+
+
+@pytest.fixture(scope="module")
+def written_state(spark, tmp_path_factory):
+    """A state_dir holding one committed batch under the default config,
+    and the corpus it came from."""
+    sdf = webtext_spark_df(spark, 120, seed=5).localCheckpoint(eager=True)
+    sd = str(tmp_path_factory.mktemp("written") / "state")
+    IncrementalDedup(spark, DedupConfig(), state_dir=sd).ingest_batch(
+        sdf.where("doc_id < 60"), batch_id=0
+    )
+    return sd, sdf
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("threshold", 0.5),
+        ("shingle_size", 4),
+        ("num_perm", 128),
+        ("seed", 7),
+        ("preprocess", PREPROCESS_FULL),
+        ("band_drop_threshold", 100),
+    ],
+)
+def test_state_dir_rejects_changed_config(spark, written_state, field, value):
+    """Reopening a state_dir under a config that changes the stored
+    signatures or edges would mix incompatible state."""
+    sd, _ = written_state
+    with pytest.raises(ValueError, match=field):
+        IncrementalDedup(spark, DedupConfig(**{field: value}), state_dir=sd)
+
+
+def test_state_dir_accepts_plan_shape_change(spark, written_state, tmp_path):
+    """The verify broadcast cap only picks a join strategy: a state_dir
+    written under the default continues under another cap, and the
+    result still equals the global run."""
+    import shutil
+
+    src, sdf = written_state
+    sd = str(tmp_path / "state")
+    shutil.copytree(src, sd)  # the module's state stays one batch long
+    cfg = DedupConfig(verify_broadcast_max_bytes=None)
+    assign = IncrementalDedup(spark, cfg, state_dir=sd).ingest_batch(
+        sdf.where("doc_id >= 60"), batch_id=1
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in assign.collect()}
+    assert got == _global_labels(spark, sdf, DedupConfig())
